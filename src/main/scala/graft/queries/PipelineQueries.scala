@@ -20,8 +20,9 @@ object PipelineQueries {
     // S3/S4 as a LITERAL connector: the nation table is re-served as a
     // cursor-paginated page chain (the reference API's response shape)
     // and read back through the graft-rest DataSource V2 TableProvider —
-    // pagination walk on the driver, one partition per page, pruned
-    // columns pushed into the record parser. The oracle is the plain
+    // pagination walk on the driver (once per load), pages packed into
+    // contiguous runs (one partition per core), pruned columns pushed
+    // into the record parser. The oracle is the plain
     // relational content, so the whole envelope/pagination/parse path
     // must be value-transparent to pass.
     QuerySpec("q_rest_pages", (s, dir) => {

@@ -22,10 +22,11 @@ import java.util.concurrent.ConcurrentHashMap
   *     `rateLimit × executors` and the option should be sized accordingly.
   *
   * Scale shape: pagination DISCOVERY (the driver's cursor walk) and
-  * record PARSING (one partition per page) both fetch through this one
-  * code path, so politeness contracts hold everywhere; the fetch is
-  * byte-level and stateless, so a partition retry after a task failure
-  * re-GETs only its own page (idempotent replay, like the parquet side).
+  * record PARSING (one partition per contiguous run of pages) both fetch
+  * through this one code path, so politeness contracts hold everywhere;
+  * the fetch is byte-level and stateless, so a partition retry after a
+  * task failure re-GETs only its own run of pages (idempotent replay,
+  * like the parquet side).
   */
 object RestHttp {
 

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -16,19 +16,24 @@ import org.apache.spark.sql.types._
   *
   * The Spark shape of that fan-out:
   *
-  *  1. `distinct()` on the key — each key is fetched ONCE corpus-wide,
-  *     which is `lru_cache`'s intent done scale-correctly (a per-worker
-  *     LRU re-fetches across workers; a distinct does not);
+  *  1. `distinct()` on the non-NULL keys — each key is fetched ONCE
+  *     corpus-wide, which is `lru_cache`'s intent done scale-correctly (a
+  *     per-worker LRU re-fetches across workers; a distinct does not). A
+  *     NULL key costs no request: the join below can never attach a
+  *     payload to it;
   *  2. `repartition(parallelism)` — the thread-pool width becomes the
   *     fetch-partition count; [[RestHttp]]'s per-JVM window rate limiter
   *     bounds the aggregate request rate exactly like the reference's
   *     shared limiter bounds its pool;
-  *  3. `mapPartitions` GETs `key_<urlencoded>.json` per key — live
-  *     `http(s)://` base or fixture directory, the same dual transport
-  *     as the page connector; a 404 is a definitive no-match (null
-  *     payload after the join), transient failures retry;
+  *  3. Dataset `mapPartitions` GETs `key_<urlencoded>.json` per key —
+  *     live `http(s)://` base or fixture directory, the same dual
+  *     transport as the page connector; a 404 is a definitive no-match
+  *     (null payload after the join), transient failures retry;
   *  4. a left join attaches the fetched payload to every input row —
   *     the reference's merge of API results back onto the frame.
+  *
+  * All four steps are plan nodes of the returned frame: building it runs
+  * no Spark job, and the fetch happens inside the caller's action.
   *
   * `payloadSchema` is declared (string/long/double/boolean fields), not
   * inferred: lookups are schema-driven in the reference too (its BAN/ADEME
@@ -86,21 +91,19 @@ object RestLookup {
     require(!payloadSchema.fieldNames.contains(keyCol),
       s"payloadSchema must not repeat the key column $keyCol")
     val conf = RestConf(base, 0, rateLimit, maxRetries, retryDelayMs)
-    val spark = df.sparkSession
     val keyField = df.schema(keyCol)
     val outSchema = StructType(keyField +: payloadSchema.fields)
-    val keys = df.select(col(keyCol)).distinct()
+    val keys = df.select(col(keyCol)).where(col(keyCol).isNotNull).distinct()
       .repartition(parallelism)
-    val fetched = keys.rdd.mapPartitions { rows =>
+    val fetched = keys.mapPartitions { rows =>
       val mapper = new ObjectMapper()
       rows.map { r =>
         val keyVal = r.get(0)
-        val payload = fetchKey(conf, String.valueOf(keyVal), payloadSchema,
-            mapper)
+        val payload = fetchKey(conf, keyVal.toString, payloadSchema, mapper)
           .getOrElse(payloadSchema.fields.toSeq.map(_ => null))
         Row.fromSeq(keyVal +: payload)
       }
-    }
-    df.join(spark.createDataFrame(fetched, outSchema), Seq(keyCol), "left")
+    }(Encoders.row(outSchema))
+    df.join(fetched, Seq(keyCol), "left")
   }
 }

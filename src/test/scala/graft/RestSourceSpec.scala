@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
-import graft.sources.rest.{RestFixtures, RestPages}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.sources.rest.{RestFixtures, RestLookup, RestPages}
 
 /** graft-rest DataSource V2: pagination walk, schema inference, column
   * pruning, startPage cursor, and equivalence with the modeled page-union
@@ -14,15 +17,35 @@ class RestSourceSpec extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("rest-spec").toString
 
-  test("page chain read equals source frame; one partition per page") {
+  test("page chain read equals source frame; pages pack per core") {
     val dir = tmp()
     val df = (1 to 25).map(i => (i.toLong, s"name_$i", i % 5)).toDF("id", "name", "grp")
     val n = RestFixtures.writePages(df, dir, pageSize = 10)
     assert(n === 3)
     val back = spark.read.format("graft-rest").load(dir)
+    // fewer pages than local[4]'s cores: one run, so one partition, per page
     assert(back.rdd.getNumPartitions === 3)
     assert(back.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
       .toSeq === (1 to 25).map(i => (i.toLong, s"name_$i")))
+  }
+
+  test("more pages than cores pack into contiguous runs, one per core") {
+    val dir = tmp()
+    val n = RestFixtures.writePages(
+      (1 to 25).map(i => (i.toLong, s"name_$i")).toDF("id", "name"),
+      dir, pageSize = 1)
+    assert(n === 25)
+    assert(RestPages.pack(0 until 25, 4) ===
+      Seq(0 to 6, 7 to 12, 13 to 18, 19 to 24))
+    val back = spark.read.format("graft-rest").load(dir)
+    assert(back.rdd.getNumPartitions === 4) // local[4]
+    assert(back.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq === (1 to 25).map(i => (i.toLong, s"name_$i")))
+    // Spark's leaf-scan width, when set, bounds the runs instead
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "2")
+    try assert(spark.read.format("graft-rest").load(dir)
+      .rdd.getNumPartitions === 2)
+    finally spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
   }
 
   test("matches the modeled union-of-pages query on real orders data") {
@@ -190,6 +213,35 @@ class RestSourceSpec extends SparkSpec {
     } finally stop()
   }
 
+  test("live-HTTP mode: inferred read + one collect costs 1 + 2N GETs") {
+    val dir = tmp()
+    val n = RestFixtures.writePages(
+      (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v"), dir, pageSize = 10)
+    val (base, hits, stop) = serve(dir)()
+    try {
+      val df = spark.read.format("graft-rest").option("retryDelayMs", "10")
+        .load(base)
+      assert(hits.get() === 1, "inference reads only the first non-empty page")
+      assert(df.collect().length === 50)
+      // one walk (N) + one read of every page (N)
+      assert(hits.get() === 1 + 2 * n, s"$n pages, saw ${hits.get()} GETs")
+    } finally stop()
+  }
+
+  test("live-HTTP mode: a frame read twice in one plan walks once") {
+    val dir = tmp()
+    val n = RestFixtures.writePages(
+      (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v"), dir, pageSize = 10)
+    val (base, hits, stop) = serve(dir)()
+    try {
+      val df = spark.read.format("graft-rest").option("retryDelayMs", "10")
+        .load(base)
+      assert(df.union(df).collect().length === 100)
+      // inference (1) + the table's one walk (N) + two scans' reads (2N)
+      assert(hits.get() === 1 + 3 * n, s"$n pages, saw ${hits.get()} GETs")
+    } finally stop()
+  }
+
   test("live-HTTP mode: transient 500s are retried, permanent failure raises") {
     val dir = tmp()
     RestFixtures.writePages(
@@ -289,5 +341,49 @@ class RestSourceSpec extends SparkSpec {
       assert(got.head.getString(2) === "ok")
       assert(hits.get() === 2) // one 500, one success
     } finally stop()
+  }
+
+  test("lookup join (live): a NULL key costs no request and reads null") {
+    import org.apache.spark.sql.types._
+    val dir = tmp()
+    RestFixtures.writeKeyFiles(Seq((1L, "alpha")).toDF("k", "name"), dir, "k")
+    val (base, hits, stop) = serve(dir)()
+    try {
+      val df = Seq(101L -> Some(1L), 102L -> None, 103L -> None)
+        .toDF("row_id", "k")
+      val got = RestLookup.lookupJoin(df, "k", base,
+          StructType(Seq(StructField("name", StringType))),
+          parallelism = 2, maxRetries = 1, retryDelayMs = 10)
+        .orderBy("row_id").collect()
+      assert(got.map(r => (r.getAs[Long]("row_id"),
+        Option(r.getAs[String]("name")))).toSeq ===
+        Seq((101L, Some("alpha")), (102L, None), (103L, None)))
+      assert(hits.get() === 1, s"expected 1 GET, saw ${hits.get()}")
+    } finally stop()
+  }
+
+  test("lookup join runs no Spark job until the caller's action") {
+    import org.apache.spark.sql.types._
+    val dir = tmp()
+    RestFixtures.writeKeyFiles(Seq((1L, "alpha")).toDF("k", "name"), dir, "k")
+    val df = Seq(101L -> 1L, 102L -> 2L).toDF("row_id", "k")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val joined = RestLookup.lookupJoin(df, "k", dir,
+        StructType(Seq(StructField("name", StringType))), parallelism = 2)
+      ListenerBusDrain(sc)
+      assert(jobs.get() === 0, s"construction ran ${jobs.get()} jobs")
+      assert(joined.orderBy("row_id").select("name").collect()
+        .map(r => Option(r.getString(0))).toSeq === Seq(Some("alpha"), None))
+      ListenerBusDrain(sc)
+      assert(jobs.get() > 0, "the listener saw none of the action's jobs")
+    } finally sc.removeSparkListener(listener)
   }
 }
